@@ -36,6 +36,8 @@ import struct
 
 import numpy as np
 
+from computer_vision_foundations_spark.functions.limits import MAX_DECODE_PIXELS
+
 __all__ = [
     "is_gif",
     "encode_gif",
@@ -267,7 +269,7 @@ def _skip_subblocks(data: bytes, pos: int) -> int:
 
 def decode_gif(
     data: bytes,
-    max_pixels: int = 16_000_000,
+    max_pixels: int = MAX_DECODE_PIXELS,
 ) -> tuple[list[np.ndarray], list[int], tuple[int, int]]:
     """Full decode → ``(frames, delays_cs, (width, height))``.
 

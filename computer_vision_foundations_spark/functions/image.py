@@ -303,13 +303,14 @@ def _statistics_one(content: bytes) -> dict:
         except (ValueError, struct.error, IndexError, zlib.error):
             pass
     if _png.is_jpeg(content):
-        try:  # real baseline entropy decode (functions/jpeg.py);
-            # malformed/arithmetic-coded streams fall through to the fake
+        try:  # real entropy decode (functions/jpeg.py); malformed,
+            # truncated, arithmetic-coded and over-budget streams fall
+            # through to the fake
             px = _jpeg.decode_jpeg(content)["pixels"]
             if px.ndim == 2:
                 px = px[:, :, None]
             return _pixel_statistics(px)
-        except (ValueError, struct.error, IndexError, KeyError):
+        except (ValueError, struct.error, IndexError, KeyError, MemoryError):
             pass
     px = _fake_pixels(content)
     n = len(px)
@@ -421,7 +422,7 @@ def _dhash_one(content: bytes) -> str | None:
                         for r in range(8)
                     ]
                 )
-    except (ValueError, struct.error, IndexError, KeyError, zlib.error):
+    except (ValueError, struct.error, IndexError, KeyError, zlib.error, MemoryError):
         # KeyError: JPEG scan referencing an undeclared DQT/DHT table id
         return None
     out = []
@@ -487,7 +488,10 @@ def get_image_metadata_statistics(
     boundary twice and pays two worker round-trips per task. One fused
     call computes both from a single transfer; each struct is produced
     by the same per-image function as its standalone UDF, so outputs
-    are identical."""
+    are identical. The fused call is non-deterministic (see
+    ``with_image_metadata_statistics``), so Spark cannot prune the
+    struct a consumer drops: a consumer that needs only one struct
+    should call ``get_image_metadata`` or ``get_image_statistics``."""
     for batch in it:
         lst = batch.tolist()
         yield pd.DataFrame(

@@ -2,6 +2,9 @@
 restart intervals, subsampling, and the flat-block exactness property
 the q22 oracle depends on."""
 
+import hashlib
+import time
+
 import numpy as np
 import pytest
 
@@ -239,3 +242,145 @@ def test_progressive_restart_rejected_in_encoder():
             restart_interval=2,
             progressive=True,
         )
+
+
+# ------------------------------------------------ golden pixel digests
+#
+# sha256 of the decoded pixels, recorded with the bit-serial decoder the
+# table-driven one replaced. Any change to entropy decoding, dequantize,
+# IDCT, upsampling or color conversion moves a digest.
+
+
+def _smooth_noise(rng, shape, sigma):
+    """A diagonal gradient plus seeded Gaussian noise, like camera JPEGs."""
+    h, w = shape[:2]
+    y, x = np.mgrid[0:h, 0:w].astype(np.float64)
+    base = 255.0 * (x + y) / (h + w)
+    if len(shape) == 3:
+        base = np.stack([(base + 60 * b) % 256 for b in range(3)], axis=-1)
+    return np.clip(base + rng.normal(0.0, sigma, shape), 0, 255).astype(np.uint8)
+
+
+def _golden_payloads() -> dict:
+    rng = np.random.default_rng(20261017)
+    return {
+        "444_q80": encode_jpeg(_smooth_noise(rng, (40, 56, 3), 25), quality=80),
+        "420": encode_jpeg(_smooth_noise(rng, (48, 64, 3), 15), quality=85, subsampling="420"),
+        "422": encode_jpeg(_smooth_noise(rng, (40, 48, 3), 15), quality=85, subsampling="422"),
+        "gray": encode_jpeg(_smooth_noise(rng, (48, 40), 30), quality=75),
+        "odd_37x53": encode_jpeg(_smooth_noise(rng, (37, 53, 3), 20), quality=90, subsampling="420"),
+        "restart_3": encode_jpeg(
+            _smooth_noise(rng, (64, 80, 3), 20), quality=80, subsampling="420", restart_interval=3
+        ),
+        "progressive": encode_jpeg(
+            _smooth_noise(rng, (40, 56, 3), 20), quality=85, subsampling="420", progressive=True
+        ),
+        "256_sigma20": encode_jpeg(_smooth_noise(rng, (256, 256, 3), 20), quality=80),
+    }
+
+
+GOLDEN_DIGESTS = {
+    "444_q80": ((40, 56, 3), "259dda2d7426f7d4dded04d92064e548938bec81ea20ae0e46822bb7574b4710"),
+    "420": ((48, 64, 3), "0f2953710e0ba44edb47e6833d8a0b206867a2fd9cc33575c1e3a2843539ff99"),
+    "422": ((40, 48, 3), "13b241f2d9545b65b1c5bcf6d844450c1bb2b79b1e6ca918b411296883fbfaed"),
+    "gray": ((48, 40), "b8ae19a03554c744d012b3931ac02f1fcac915f0c479ea4077197ff4cc0fddbc"),
+    "odd_37x53": ((37, 53, 3), "d3e87157555798bdfa0f42c06a620a5cce44b9199291e8328378ec049f56f376"),
+    "restart_3": ((64, 80, 3), "62fca5fbd71c80a393ba33b3c8690d3600876430ffde64fae5eadf28f6caab55"),
+    "progressive": ((40, 56, 3), "eeeaac84c83c173c2e54d457eee7ac510985ac2f0be51f055533a8e0cc8c03b8"),
+    "256_sigma20": ((256, 256, 3), "3f263fa07d5cb8e8de323530f32fcc0b48fd7cce8ebc38a90cc3f777ad5c9218"),
+}
+
+
+def test_golden_pixel_digests():
+    for name, data in _golden_payloads().items():
+        px = decode_jpeg(data)["pixels"]
+        shape, digest = GOLDEN_DIGESTS[name]
+        assert px.shape == shape, name
+        assert hashlib.sha256(px.tobytes()).hexdigest() == digest, name
+
+
+# ---------------------------------------------------- truncation contract
+
+
+def _scan_data_ranges(data: bytes) -> list[tuple[int, int]]:
+    """[start, end) of every scan's entropy-coded data: from the end of
+    its SOS header to the marker that ends it (RST markers included)."""
+    ranges = []
+    pos = data.find(b"\xff\xda")
+    while pos != -1:
+        start = pos + 2 + int.from_bytes(data[pos + 2 : pos + 4], "big")
+        end = start
+        while not (data[end] == 0xFF and data[end + 1] not in (0x00, *range(0xD0, 0xD8))):
+            end += 1
+        ranges.append((start, end))
+        pos = data.find(b"\xff\xda", end)
+    return ranges
+
+
+def test_truncation_sweep():
+    """Every cut inside the entropy-coded data raises ValueError, whether
+    the data then ends at EOF, at a trailing lone 0xFF or at a marker;
+    dropping only the EOI still decodes the whole image."""
+    rng = np.random.default_rng(5)
+    payloads = {
+        "baseline": encode_jpeg(_smooth_noise(rng, (16, 24, 3), 40), quality=90),
+        "restart": encode_jpeg(_smooth_noise(rng, (24, 24), 60), quality=95, restart_interval=2),
+        "progressive": encode_jpeg(_smooth_noise(rng, (16, 16, 3), 40), quality=90, progressive=True),
+    }
+    for name, data in payloads.items():
+        assert data.endswith(b"\xff\xd9")
+        full = decode_jpeg(data)["pixels"]
+        cut_eoi = decode_jpeg(data[:-2])["pixels"]
+        assert np.array_equal(cut_eoi, full), name
+        ranges = _scan_data_ranges(data)
+        assert ranges[-1][1] == len(data) - 2
+        assert any(data[c - 1] == 0xFF for s, e in ranges for c in range(s + 1, e)), name
+        for start, end in ranges:
+            for cut in range(start, end):
+                for blob in (data[:cut], data[:cut] + b"\xff\xd9"):
+                    with pytest.raises(ValueError):
+                        decode_jpeg(blob)
+
+
+# ------------------------------------------------------- header budget
+
+
+def _patch_sof(data: bytes, height: int, width: int) -> bytes:
+    i = data.find(b"\xff\xc0")
+    return data[: i + 5] + height.to_bytes(2, "big") + width.to_bytes(2, "big") + data[i + 9 :]
+
+
+def test_forged_dimensions_rejected_before_allocation():
+    data = encode_jpeg(np.full((16, 16, 3), 90, np.uint8), quality=90)
+    t = time.perf_counter()
+    with pytest.raises(ValueError, match="pixel budget"):
+        decode_jpeg(_patch_sof(data, 60000, 60000))
+    assert time.perf_counter() - t < 1.0
+    for h, w in ((0, 16), (16, 0)):
+        with pytest.raises(ValueError, match="zero"):
+            decode_jpeg(_patch_sof(data, h, w))
+
+
+def test_forged_frame_fields_raise_value_error():
+    """Header fields that would divide by zero, allocate per declared
+    component, or name a missing component raise the fallback-able kind."""
+    data = encode_jpeg(np.full((16, 16), 90, np.uint8), quality=90)
+    sof = data.find(b"\xff\xc0")
+    sos = data.find(b"\xff\xda")
+    for at, value, match in (
+        (sof + 11, 0x00, "sampling"),  # 0x0 sampling factors
+        (sof + 11, 0x51, "sampling"),  # horizontal factor 5
+        (sof + 9, 4, "component count"),
+        (sos + 5, 9, "undeclared component"),
+    ):
+        forged = data[:at] + bytes([value]) + data[at + 1 :]
+        with pytest.raises(ValueError, match=match):
+            decode_jpeg(forged)
+
+
+def test_forged_dimensions_take_fallback():
+    from computer_vision_foundations_spark.functions import image as I
+
+    data = _patch_sof(encode_jpeg(np.full((16, 16), 90, np.uint8), quality=90), 60000, 60000)
+    assert len(I._statistics_one(data)["mean"]) == 1  # _fake_pixels: one band
+    assert I._dhash_one(data) is None
